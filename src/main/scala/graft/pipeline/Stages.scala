@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.query.{BoolF, F}
 import graft.store.{ConnectOrCreate, Txn}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -26,7 +25,10 @@ final case class StageMetrics(processed: Long, succeeded: Long,
   * Scale: every step is a join/filter/union on key columns — no driver-side
   * iteration or collected id lists; status flips are join-based bulk
   * updates ([[graft.store.Txn.updateWhereIn]]) whose small key side AQE
-  * broadcasts. The extractor boundary is the only external-I/O leg and is
+  * broadcasts. Each stage flips success and failure in ONE statement (the
+  * failure flip is the update's else-branch), so a flip pays one census
+  * and one multi-slice write, and the pending slice is rewritten once per
+  * run. The extractor boundary is the only external-I/O leg and is
   * batched per partition.
   */
 object Stages {
@@ -114,10 +116,10 @@ object Stages {
     Retry.onConflict() {
       Txn.run(store.catalog) { tx =>
         inserted = tx.createMany(store.places, newPlaces, skipDuplicates = true)
+        // sources with candidates succeed, every other pending one fails
         succeeded = tx.updateWhereIn(store.urls, "id", okSources, pendingCond,
-          Map("status" -> lit(true)))
-        tx.updateMany(store.urls, F.raw(pendingCond),
-          Map("status" -> lit(false), "notes" -> lit("extraction failed")))
+          Map("status" -> lit(true)),
+          elseSet = Map("status" -> lit(false), "notes" -> lit("extraction failed")))
       }
     }
     extracted.unpersist()
@@ -190,9 +192,8 @@ object Stages {
         inserted = tx.createNested(store.companies, companyBatch, Seq(tagsNested),
           skipDuplicates = true)
         succeeded = tx.updateWhereIn(store.places, "id", acceptedKeys, pendingCond,
-          Map("status" -> lit(true)))
-        tx.updateMany(store.places, F.raw(pendingCond),
-          Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
+          Map("status" -> lit(true)),
+          elseSet = Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
       }
     }
     extracted.unpersist(); accepted.unpersist()
@@ -265,8 +266,9 @@ object Stages {
         tx.createMany(store.crmEvents, newEvents, skipDuplicates = true)
       }
     }
-    val succeeded = outcomes.filter(col("ok")).count()
-    val failed = outcomes.filter(!col("ok")).count()
+    val tally = outcomes.agg(
+      count(when(col("ok"), 1)), count(when(!col("ok"), 1))).head()
+    val (succeeded, failed) = (tally.getLong(0), tally.getLong(1))
     candidates.unpersist(); hydrated.unpersist(); toSkip.unpersist(); outcomes.unpersist()
     val m = StageMetrics(processed, succeeded, failed, skipped, succeeded + failed)
     notify(store, "CRM_Sync", "crm sync run complete", m)

@@ -524,7 +524,8 @@ final class Model(
         .filter(col("__rn") === 1).drop("__rn")
     }
     cur = applyCursor(cur, args.cursor, args.orderBy)
-    args.take match {
+    // the order the page is returned in (none when the caller gave none)
+    val order: Seq[OrderBy] = args.take match {
       case Some(n) if n < 0 =>
         // negative take (models/Company.ts:130-136): the LAST |n| rows
         // w.r.t. the order, returned in the ORIGINAL order — sort reversed
@@ -537,12 +538,17 @@ final class Model(
         cur = cur.orderBy(reversed.map(_.column): _*)
         args.skip.foreach(m => cur = cur.offset(m))
         cur = cur.limit(-n).orderBy(keys.map(_.column): _*)
+        keys
       case _ =>
         if (args.orderBy.nonEmpty) cur = cur.orderBy(args.orderBy.map(_.column): _*)
         args.skip.foreach(m => cur = cur.offset(m))
         args.take.foreach(m => cur = cur.limit(m))
+        args.orderBy
     }
-    cur = applyInclude(cur, args.include.map(IncludeArgs(_)) ++ args.includeArgs)
+    val include = args.include.map(IncludeArgs(_)) ++ args.includeArgs
+    cur = applyInclude(cur, include)
+    // the hydration joins shuffle the page: re-establish its order
+    if (include.nonEmpty && order.nonEmpty) cur = cur.orderBy(order.map(_.column): _*)
     if (args.select.nonEmpty) cur = cur.select(args.select.map(col): _*)
     if (args.omit.nonEmpty) cur = cur.drop(args.omit: _*)
     cur

@@ -606,10 +606,23 @@ final class GraftTable(
 
   // ---------- staged (transactional) computation ----------
 
-  /** Distinct partition keys of a slice plus its row count, in one action. */
-  private def pkStats(df: DataFrame): (Set[String], Long) = {
-    val rows = df.groupBy(partKeyCol.as("__pk")).count().collect()
-    (rows.map(_.getString(0)).toSet, rows.map(_.getLong(1)).sum)
+  /** Distinct partition keys of a slice plus its row count, in one action.
+    * An update's census passes its SET: when the SET writes a partition
+    * column, rows are keyed by their pre- AND post-SET slice from the same
+    * `groupBy`, so a partition-moving update touches both source and
+    * destination slices. Only rows satisfying `counted` count (an
+    * else-branch rewrites rows the statement does not report). */
+  private def pkStats(df: DataFrame, set: Map[String, Column] = Map.empty,
+                      counted: Column = lit(true)): (Set[String], Long) = {
+    val moves = partitionCols.exists(set.contains)
+    val keyed = df.withColumn("__pk", partKeyCol)
+    val grouped =
+      if (moves) withSet(keyed, lit(true), set).groupBy(col("__pk"), partKeyCol.as("__postpk"))
+      else keyed.groupBy(col("__pk"))
+    val rows = grouped.agg(count(when(counted, 1)).as("n")).collect()
+    val keyCols = if (moves) 2 else 1
+    (rows.flatMap(r => (0 until keyCols).map(r.getString)).toSet,
+      rows.map(_.getAs[Long]("n")).sum)
   }
 
   /** Apply a SET clause to rows where `cond` holds (untouched rows pass
@@ -657,14 +670,23 @@ final class GraftTable(
     *
     * `currentEmpty` = the caller (the transaction, which owns the
     * slice-dir map) KNOWS `current` has no committed slices — pre-first
-    * insert — so the snapshot probes are skipped entirely. */
+    * insert — so the snapshot probes are skipped entirely.
+    *
+    * `carry`: non-schema batch columns (a nested write's payload) that
+    * ride the checkpoint and come back on the returned slice, so a caller
+    * derives more writes from the SAME frozen survivors the slice writes
+    * see. `nonNullKey`: columns that must be non-null on every batch row
+    * (P2011 otherwise) — one more observed metric, no extra action. */
   private[store] def stagedCreateReturning(current: DataFrame, rows: DataFrame,
                                            skipDuplicates: Boolean,
-                                           currentEmpty: Boolean = false): (Staged, DataFrame) = {
+                                           currentEmpty: Boolean = false,
+                                           carry: Seq[String] = Nil,
+                                           nonNullKey: Seq[String] = Nil): (Staged, DataFrame) = {
     // a nondeterministic expression can't sit inside a window ORDER BY —
     // project the tie-break id first (its value is arbitrary; the
     // checkpoint below freezes whatever was drawn)
-    var marked = touch(align(rows), timestampCols)
+    var marked = touch(rows.select((schema.fieldNames.toSeq ++ carry).map(col): _*),
+      timestampCols)
       .withColumn("__mid", monotonically_increasing_id())
     var keep: Column = lit(true)
     var tmpCols: Seq[String] = Seq("__mid")
@@ -705,6 +727,7 @@ final class GraftTable(
     val lenViol = maxLengths.toSeq
       .map { case (c, mx) => length(col(c)) > mx }
       .reduceOption(_ || _).getOrElse(lit(false))
+    val nullKey = nonNullKey.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
     val obs = new org.apache.spark.sql.Observation()
     marked = marked.withColumn("__keep", keep).drop(tmpCols: _*)
       .observe(obs,
@@ -712,9 +735,14 @@ final class GraftTable(
         count(when(col("__keep"), 1)).as("n"),
         count(when(col("__keep") && nullViol, 1)).as("nv"),
         count(when(col("__keep") && lenViol, 1)).as("lv"),
+        count(when(nullKey, 1)).as("nk"),
         collect_set(when(col("__keep"), partKeyCol)).as("pks"))
       .localCheckpoint()
     val m = obs.get
+    if (m("nk").asInstanceOf[Long] > 0)
+      throw new NullConstraintException(
+        s"$name: createNested parent key ${nonNullKey.mkString(",")} must be " +
+          "non-null (null-keyed parents cannot be paired with their nested writes)")
     val rawN = m("all").asInstanceOf[Long]
     val n = m("n").asInstanceOf[Long]
     val touched = m("pks").asInstanceOf[scala.collection.Seq[String]].toSet
@@ -730,10 +758,14 @@ final class GraftTable(
         s"$name: unique constraint would be violated on ${uniqueKeys.mkString(",")}")
     // the probe using-joins moved the key columns to the front — put the
     // returned slice back in declared order (createManyAndReturn hands
-    // this frame to the caller; positional consumers must see the schema)
-    val clean = marked.filter(col("__keep"))
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    (Staged(current.unionByName(clean), touched, n), clean)
+    // this frame to the caller; positional consumers must see the schema),
+    // followed by the carried payload columns
+    val survivors = marked.filter(col("__keep"))
+    val clean = survivors.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val returned =
+      if (carry.isEmpty) clean
+      else survivors.select((schema.fieldNames.toSeq ++ carry).map(col): _*)
+    (Staged(current.unionByName(clean), touched, n), returned)
   }
 
   /** The post-update image of ONLY the matched rows — the slice FK
@@ -824,19 +856,12 @@ final class GraftTable(
 
   private[store] def stagedUpdate(current: DataFrame, where: Where,
                                   set: Map[String, Column], single: Boolean): Staged = {
-    val rawCond = Where.compile(where, current.apply)
-    val cond0 = coalesce(rawCond, lit(false))
+    val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
     val matched = current.filter(cond0)
-    val (before, n) = pkStats(matched)
+    val (touched, n) = pkStats(matched, set)
     if (single && n == 0)
       throw new RecordNotFoundException(s"$name: update found no row")
     validateUpdated(withSet(matched, lit(true), set), set.keySet)
-    // if the SET moves rows across partitions, the destination slices are
-    // touched too (computed on the matched slice only — small)
-    val touched =
-      if (partitionCols.exists(set.contains))
-        before ++ pkStats(withSet(matched, lit(true), set))._1
-      else before
     // materialize the predicate BEFORE any column is rewritten — a `when`
     // chain re-resolving the condition against already-updated columns
     // would silently stop matching mid-update
@@ -845,28 +870,47 @@ final class GraftTable(
     Staged(next, touched, n)
   }
 
-  /** Join-based bulk update: set `set` on rows whose `keyCol` appears in
-    * `keys` (and that satisfy `extraCond`). Distributed equivalent of
-    * `UPDATE … WHERE id IN (SELECT …)` — used by the pipeline to flip
-    * statuses for a whole processed slice without collecting ids to the
-    * driver (the keys side is a small DataFrame → AQE broadcasts it). */
-  private[store] def stagedUpdateWhereIn(current: DataFrame, keyCol: String,
-                                         keys: DataFrame, extraCond: Column,
+  /** `current` left-joined to the distinct `keys` with both branch
+    * predicates materialized before any column is rewritten (see
+    * [[stagedUpdate]]): `__hit` = the key is in `keys`, `__upd` = the
+    * statement rewrites the row — a key hit satisfying `extraCond`, or,
+    * with an else-branch, ANY row satisfying `extraCond`. The keys side
+    * is a small DataFrame, so AQE broadcasts it. */
+  private[store] def markWhereIn(current: DataFrame, keyCol: String, keys: DataFrame,
+                                 extraCond: Column, withElse: Boolean): DataFrame = {
+    val marker = keys.select(col(keyCol)).distinct().withColumn("__hit", lit(true))
+    val inScope = coalesce(extraCond, lit(false))
+    current.join(marker, Seq(keyCol), "left")
+      .withColumn("__hit", coalesce(col("__hit"), lit(false)))
+      .withColumn("__upd", if (withElse) inScope else col("__hit") && inScope)
+  }
+
+  /** The effective SET of a where-in update with an else-branch, one CASE
+    * per written column over [[markWhereIn]]'s `__hit`: key hits take
+    * `set`, the other rewritten rows take `elseSet`, and a column only one
+    * branch writes keeps its value in the other. An empty else-branch is
+    * `set` itself. Valid on any frame carrying `__hit`. */
+  private[store] def caseSet(set: Map[String, Column],
+                             elseSet: Map[String, Column]): Map[String, Column] =
+    if (elseSet.isEmpty) set
+    else (set.keySet ++ elseSet.keySet).iterator.map { c =>
+      c -> when(col("__hit"), set.getOrElse(c, col(c)))
+        .otherwise(elseSet.getOrElse(c, col(c)))
+    }.toMap
+
+  /** Join-based bulk update over a [[markWhereIn]] frame: rows flagged
+    * `__upd` take `set` (a [[caseSet]] when the statement has an
+    * else-branch) — the distributed `UPDATE … SET c = CASE WHEN id IN
+    * (SELECT …) THEN … ELSE … END WHERE extraCond`, with no collected id
+    * list on the driver. ONE census action plus the slice write; the
+    * result count is the key hits only. */
+  private[store] def stagedUpdateWhereIn(marked: DataFrame,
                                          set: Map[String, Column]): Staged = {
-    val marker = keys.select(col(keyCol)).distinct().withColumn("__match", lit(true))
-    // materialize the predicate before rewriting columns (see stagedUpdate)
-    val joined = current.join(marker, Seq(keyCol), "left")
-      .withColumn("__upd", coalesce(col("__match"), lit(false)) && coalesce(extraCond, lit(false)))
-    val cond = col("__upd")
-    val matched = joined.filter(cond)
+    val changed = marked.filter(col("__upd"))
     validateUpdated(
-      withSet(matched, lit(true), set).drop("__match", "__upd"), set.keySet)
-    val (before, n) = pkStats(matched)
-    val touched =
-      if (partitionCols.exists(set.contains))
-        before ++ pkStats(withSet(matched, lit(true), set))._1
-      else before
-    val next = withSet(joined, cond, set).drop("__match", "__upd")
+      withSet(changed, lit(true), set).drop("__hit", "__upd"), set.keySet)
+    val (touched, n) = pkStats(changed, set, counted = col("__hit"))
+    val next = withSet(marked, col("__upd"), set).drop("__hit", "__upd")
     Staged(next, touched, n)
   }
 
@@ -953,6 +997,16 @@ final class GraftTable(
     Set(StringType, BooleanType, ByteType, ShortType, IntegerType, LongType)
   }
 
+  /** Key-column types whose collected JVM values group exactly as Spark's
+    * window partitioning does — the [[localDelta]] survivor dedup hashes
+    * collected keys on the driver. Binary keys collect as `Array[Byte]`
+    * (reference equality: every duplicate image would survive), float and
+    * double keys bypass Spark's normalization (NaN never equals NaN on
+    * the JVM, while Spark groups every NaN as one key), and decimal
+    * equality on the JVM is scale-sensitive; those take the Spark path. */
+  private val driverSafeKeyTypes: Set[org.apache.spark.sql.types.DataType] =
+    driverSafePartTypes ++ Set(DateType, TimestampType)
+
   /** [[checkpointDelta]]'s DRIVER-SIDE fast path: a delta whose optimized
     * plan is a `LocalRelation` (literal batches — index meta rows,
     * cursor rows, small Seq-built upserts) is already driver-resident
@@ -967,7 +1021,8 @@ final class GraftTable(
     * group as equal (window partitioning semantics), and the slice key
     * replicates [[partKeyCol]] through [[Catalog.encodeValue]] — gated
     * on [[driverSafePartTypes]] so a cast-vs-toString divergence
-    * (timestamps, decimals) falls back to the Spark path. */
+    * (timestamps, decimals) falls back to the Spark path, and the key
+    * columns are gated on [[driverSafeKeyTypes]]. */
   private def localDelta(tagged: DataFrame, keyCols: Seq[String])
       : Option[(DataFrame, Long, Long, Set[String])] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -987,6 +1042,8 @@ final class GraftTable(
     }
     if (!isLocal) return None
     if (partitionCols.exists(c => !driverSafePartTypes.contains(schema(c).dataType)))
+      return None
+    if (keyCols.exists(c => !driverSafeKeyTypes.contains(tagged.schema(c).dataType)))
       return None
     val dataCols = schema.fieldNames.toSeq
     val inSchema = tagged.schema // dataCols :+ __del, by both callers
@@ -1435,19 +1492,30 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     s.n
   }
 
+  /** Join-based bulk update: rows whose `keyCol` appears in `keys` and
+    * that satisfy `extraCond` take `set` — the distributed `UPDATE …
+    * WHERE id IN (SELECT …)` the pipeline flips statuses with, no id list
+    * on the driver. A non-empty `elseSet` is the statement's else-branch:
+    * rows satisfying `extraCond` whose key is NOT in `keys` take it in the
+    * SAME statement (`SET c = CASE WHEN id IN (…) THEN … ELSE … END`), so
+    * a success/failure flip runs one census and one multi-slice write
+    * instead of two statements that each rewrite the shared source slice.
+    * Rows outside `extraCond` are untouched. Returns the key-hit count.
+    *
+    * FK re-validation and `ON UPDATE CASCADE` see the effective CASE SET
+    * over every rewritten row, so an else-branch writing an FK or a
+    * referenced key is checked and propagated like the key-hit branch. */
   def updateWhereIn(t: GraftTable, keyCol: String, keys: DataFrame,
-                    extraCond: Column, set: Map[String, Column]): Long = {
-    val cur = stateOf(t)
-    val s = t.stagedUpdateWhereIn(cur, keyCol, keys, extraCond, set)
-    // matched-rows view: key ∈ keys ∧ extraCond
-    def matched = {
-      val marker = keys.select(col(keyCol)).distinct()
-      cur.join(marker, Seq(keyCol), "left_semi")
-        .filter(coalesce(extraCond, lit(false)))
-    }
-    checkUpdatedRefs(t, set, t.applySet(matched, set))
+                    extraCond: Column, set: Map[String, Column],
+                    elseSet: Map[String, Column] = Map.empty): Long = {
+    val marked = t.markWhereIn(stateOf(t), keyCol, keys, extraCond, elseSet.nonEmpty)
+    val eff = t.caseSet(set, elseSet)
+    val s = t.stagedUpdateWhereIn(marked, eff)
+    // pre-image of every rewritten row (key hits, plus else-branch rows)
+    def changed = marked.filter(col("__upd"))
+    checkUpdatedRefs(t, eff, t.applySet(changed, eff))
     stage(t, s)
-    cascadeParentKeyRewrite(t, set, matched)
+    cascadeParentKeyRewrite(t, eff, changed)
     s.n
   }
 
@@ -1551,11 +1619,6 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     stage(t, s); s.n
   }
 
-  /** Nested create (`create`/`createMany` with `{create | connectOrCreate}`
-    * relation payloads, `effect.ts:471-477`): insert the parent batch, then
-    * run each [[NestedWrite]] against the slice that was actually inserted
-    * — with the batch's extra payload columns intact — all staged in THIS
-    * transaction. Returns the parent insert count. */
   /** ConnectOrCreate's "connect the existing row" half IS
     * skipDuplicates dedup against the relation/link tables — without a
     * unique key there, every call would silently re-insert existing
@@ -1570,54 +1633,39 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       case _ => ()
     }
 
+  /** Nested create (`create`/`createMany` with `{create | connectOrCreate}`
+    * relation payloads, `effect.ts:471-477`): insert the parent batch, then
+    * run each [[NestedWrite]] against the slice that was actually inserted
+    * — with the batch's extra payload columns intact — all staged in THIS
+    * transaction. Returns the parent insert count.
+    *
+    * The payload columns ride the parent insert's own checkpoint
+    * ([[GraftTable.stagedCreateReturning]]'s `carry`), and every nested
+    * write derives from that frozen survivor frame: the parent row and its
+    * children come from the same survivor (under skipDuplicates too), and
+    * the batch plan never re-executes under a nested write. A NULL parent
+    * key has no pairing identity, so its children could never be attached
+    * — it is rejected (P2011) by an observed metric on the same
+    * checkpoint, before anything is staged. */
   def createNested(t: GraftTable, rows: DataFrame, nested: Seq[NestedWrite],
                    skipDuplicates: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
     requireConnectKeys(nested)
-    // Pre-resolve the batch BEFORE both the insert and the nested
-    // derivation, so children derive from the row that was ACTUALLY
-    // inserted:
-    //  - NULL-keyed parents have no pairing identity (the semi-join
-    //    below can never match them) — their nested writes would be
-    //    silently skipped, so they are rejected up front;
-    //  - under skipDuplicates, in-batch duplicate keys dedupe HERE,
-    //    deterministically (smallest canonical rendering wins), and the
-    //    SAME frame feeds stagedCreateReturning — previously the staged
-    //    create and the dropDuplicates below each picked an arbitrary
-    //    survivor, so children could derive from a payload that was
-    //    never written. Without skipDuplicates, in-batch duplicates must
-    //    still ERROR in the staged create, so the batch passes through.
-    val key = if (nested.nonEmpty) {
+    val (key, carry) = if (nested.isEmpty) (Nil, Nil) else {
       require(t.uniqueKeys.nonEmpty,
         s"${t.name}: nested writes need a unique key to identify inserted parents")
-      t.uniqueKeys.head
-    } else Nil
-    val resolved = if (nested.isEmpty) rows else {
-      // ONE bounded action for the whole key (limit-1 probe), not one
-      // per key column — this is the single action the nested path adds
-      // to the insert budget (ActionBudgetSpec pins it)
-      if (rows.filter(key.map(fcol(_).isNull).reduce(_ || _)).limit(1).count() > 0)
-        throw new NullConstraintException(
-          s"${t.name}: createNested parent key ${key.mkString(",")} must be " +
-            "non-null (null-keyed parents cannot be paired with their nested writes)")
-      if (!skipDuplicates) rows
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(key.map(fcol): _*)
-          .orderBy(org.apache.spark.sql.functions.to_json(
-            org.apache.spark.sql.functions.struct(rows.columns.map(fcol): _*)))
-        rows.withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-          .filter(fcol("__rn") === 1).drop("__rn")
-      }
+      val payload = rows.columns.toSeq
+        .filterNot(c => t.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      payload.foreach(c => require(!c.startsWith("__"),
+        s"${t.name}: payload column $c — the __ prefix is reserved for engine columns"))
+      (t.uniqueKeys.head, payload)
     }
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), resolved, skipDuplicates,
-      currentEmpty = isFresh(t))
+    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows, skipDuplicates,
+      currentEmpty = isFresh(t), carry = carry, nonNullKey = key)
     checkParentRefs(t, inserted)
     stage(t, s)
     if (nested.nonEmpty) {
-      // re-attach payload columns: batch rows whose key actually landed
-      val insertedFull = resolved
-        .join(inserted.select(key.map(fcol): _*), key, "left_semi")
+      // the batch's own shape, restricted to the rows that actually landed
+      val insertedFull = inserted.select(rows.columns.toSeq.map(col): _*)
       nested.foreach {
         case NestedCreate(child, f, skipDup) =>
           createMany(child, f(insertedFull), skipDup)

@@ -158,6 +158,34 @@ class ModelSpec extends AnyFunSuite with SparkTestBase {
     assert(c1.getAs[Int]("_count_servicesOffered") == 2)
   }
 
+  test("include keeps the orderBy order of a taken page over a multi-partition relation") {
+    val parents = (0 until 40).map(i => (f"p$i%02d", s"name-$i")).toDF("id", "name")
+    val kids = (0 until 120).map(i => (s"k$i", f"p${i % 40}%02d")).toDF("kid", "pid")
+      .repartition(3)
+    val m = new Model(df = () => parents, primaryKey = "id",
+      relations = Seq(OneToMany("kids", () => kids, localKey = "id", foreignKey = "pid")))
+    // a relation too large to broadcast: the hydration join shuffles the
+    // page on the key, and the declared order must survive that
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      // whole rows: projecting `id` alone would prune the hydration join
+      val page = m.findMany(QueryArgs(orderBy = Seq(OrderBy("id", desc = true)),
+        skip = Some(2), take = Some(15), include = Seq("kids"))).collect()
+      assert(page.map(_.getAs[String]("id")).toSeq == (37 to 23 by -1).map(i => f"p$i%02d"))
+      assert(page.forall(r => r.getSeq[Any](r.fieldIndex("kids")).size == 3))
+      // negative take: the last 10 in the original (descending) order
+      val last = m.findMany(QueryArgs(orderBy = Seq(OrderBy("name", desc = true)),
+        take = Some(-10), include = Seq("kids"))).collect()
+      assert(last.map(_.getAs[String]("name")).toSeq ==
+        (0 until 40).map(i => s"name-$i").sorted.reverse.takeRight(10))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("negative take returns the last N in the original order") {
     val r = companies.findMany(QueryArgs(
       orderBy = Seq(OrderBy("name")), take = Some(-2)))

@@ -865,4 +865,29 @@ class StoreSpec extends AnyFunSuite with SparkTestBase {
       t.createMany(Seq(("r3", "x", "1")).toDF("id", "a", "b"))
     }
   }
+
+  test("literal upsert batches dedup duplicate binary keys as Spark groups them") {
+    val cat = freshCatalog()
+    val bin = new GraftTable(spark, cat, "blob_kv", StructType(Seq(
+      StructField("k", BinaryType, nullable = false),
+      StructField("v", StringType, nullable = true))),
+      uniqueKeys = Seq(Seq("k")))
+    // two images of ONE binary key: byte arrays compare by reference on
+    // the JVM, so a driver-side dedup would keep both
+    assert(bin.upsert(Seq("k"), Seq((Array[Byte](1, 2), "a"), (Array[Byte](1, 2), "b"))
+      .toDF("k", "v")) == 1)
+    assert(bin.snapshot().count() == 1)
+  }
+
+  test("literal upsert batches dedup -0.0/0.0 and NaN keys as Spark groups them") {
+    val cat = freshCatalog()
+    val dbl = new GraftTable(spark, cat, "double_kv", StructType(Seq(
+      StructField("k", DoubleType, nullable = false),
+      StructField("v", StringType, nullable = true))),
+      uniqueKeys = Seq(Seq("k")))
+    // -0.0/0.0 and NaN/NaN are one key each under Spark's normalization
+    assert(dbl.upsert(Seq("k"), Seq((0.0, "a"), (-0.0, "b"), (Double.NaN, "c"),
+      (Double.NaN, "d")).toDF("k", "v")) == 2)
+    assert(dbl.snapshot().count() == 2)
+  }
 }
